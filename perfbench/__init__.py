@@ -1,0 +1,1 @@
+"""Tier-store benchmark (see README.md); entry point: perfbench/run.py."""
